@@ -269,8 +269,12 @@ object Bench {
     import org.json4s.jackson.JsonMethods
     try {
       val j = JsonMethods.parse(line)
-      def raw(k: String): String =
-        JsonMethods.compact(JsonMethods.render(j \ k))
+      // a missing key renders as JSON null: JNothing would splice in
+      // as nothing at all ("runs":,) and break the line's parse
+      def raw(k: String): String = j \ k match {
+        case JNothing => "null"
+        case v => JsonMethods.compact(JsonMethods.render(v))
+      }
       val nQueries = (j \ "queries") match {
         case JObject(fields) => fields.size
         case _ => -1

@@ -194,14 +194,12 @@ final class M5Pipeline(spark: SparkSession, config: YamlConfig) {
       body = () => {
         val sales = spark.read.parquet(trainTask.target.path)
         // validation split point: min of the last valid_num_days
-        // distinct train dates (O23/O24, pipeline.py:245-246)
+        // distinct train dates (O23/O24, pipeline.py:245-246) — one
+        // top-n read; fewer than n dates gives the overall min
         val n = config.getInt("valid_num_days")
-        val distinctDates = sales.select("date").distinct()
-        val nDates = distinctDates.count()
-        val validStart =
-          if (nDates <= n) distinctDates.agg(min(col("date"))).head().getDate(0)
-          else Relational.nthFromLastDistinct(sales.select(col("date")), "date", n)
-            .head().getDate(0)
+        val validStart = sales.select("date").where(col("date").isNotNull)
+          .distinct().orderBy(col("date").desc).limit(n)
+          .collect().map(_.getDate(0)).minByOption(_.getTime).orNull
 
         val featureCols = sales.columns.toSeq
           .filterNot(Set(predTargetCol, predDateCol, "date")) // O11
@@ -213,9 +211,7 @@ final class M5Pipeline(spark: SparkSession, config: YamlConfig) {
         // native categorical splits (LightGBM parity): each encoded
         // column's arity = vocab + the unseen slot; Gbt.assemble turns
         // the small-arity ones into true nominal features
-        val catArity = encoders.map { case (c, vocab) =>
-          c -> (vocab.count().toInt + 1)
-        }
+        val catArity = encoders.arity
 
         val lgbParams = config.getMap("lgb_params")
         // the reference's actual objective (full.yaml:4): tweedie routes
@@ -234,9 +230,7 @@ final class M5Pipeline(spark: SparkSession, config: YamlConfig) {
             params, catArity)
           model.write.overwrite().save(s"$dir/model")
         }
-        encoders.foreach { case (c, vocab) =>
-          vocab.write.mode("overwrite").parquet(s"$dir/encoders/$c")
-        }
+        encoders.save(spark, s"$dir/encoders.parquet")
         Files.createDirectories(Paths.get(dir))
         Files.writeString(Paths.get(dir, "feature_cols.txt"), featureCols.mkString("\n"))
         Files.writeString(Paths.get(dir, "_COMMITTED"), "ok")
@@ -258,19 +252,14 @@ final class M5Pipeline(spark: SparkSession, config: YamlConfig) {
         val featureCols = Files.readAllLines(Paths.get(dir, "feature_cols.txt"))
           .toArray(Array.empty[String]).toSeq
         val xTest = spark.read.parquet(test.target.path)
-        val stringCols = featureCols.filter(c =>
-          xTest.schema(c).dataType == org.apache.spark.sql.types.StringType)
-        val encoders = stringCols.map(c =>
-          c -> spark.read.parquet(s"$dir/encoders/$c")).toMap
+        val encoders = Gbt.Encoders.load(spark, s"$dir/encoders.parquet")
         // the id FEATURE gets encoded in place; the output id must stay
         // the original string, so stash it before encoding
         val encoded = Gbt.applyEncoders(
           xTest.withColumn("__orig_id", col("id")), encoders)
         // the same arity map the train task attached — assemble must
         // shift the same columns or codes would be off by one
-        val catArity = encoders.map { case (c, vocab) =>
-          c -> (vocab.count().toInt + 1)
-        }
+        val catArity = encoders.arity
         // a meta.json in the model dir marks the Tweedie loop's artifact;
         // the GBT path saves Spark ML's own layout
         val predicted =

@@ -1,11 +1,13 @@
 package graft.ml
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.operators.Relational
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** O37/O38 — gradient-boosted-tree regression tier.
   * Ref: LGBMRegressor fit/predict (pipeline.py:258-265, 287-294).
@@ -57,17 +59,86 @@ object Gbt {
       featureSubsetStrategy = p.get("colsample_bytree").map(_.toString).getOrElse("all"))
   }
 
-  /** Deterministic per-column dictionaries (O13 semantics) fit on the
-    * training frame; unseen/null values map to -1 at apply time. */
-  def fitEncoders(df: DataFrame, cols: Seq[String]): Map[String, DataFrame] =
-    cols.map(c => c -> Relational.labelEncode(df, c).cache()).toMap
+  /** Label encoders fit by [[fitEncoders]] (O13 semantics): each
+    * encoded string column's vocabulary, held on the driver in code
+    * order — `vocabs(c)(k)` is the value with code k. Unseen and null
+    * values map to -1 at apply time. */
+  final case class Encoders(vocabs: Seq[(String, IndexedSeq[String])]) {
 
-  def applyEncoders(df: DataFrame, encoders: Map[String, DataFrame]): DataFrame =
-    encoders.foldLeft(df) { case (acc, (c, vocab)) =>
-      acc.join(broadcast(vocab.withColumnRenamed("code", s"__code_$c")), Seq(c), "left")
+    /** Code arity per column INCLUDING the unseen slot (vocabulary + 1)
+      * — what [[assemble]]'s `catArity` expects. */
+    def arity: Map[String, Int] =
+      vocabs.map { case (c, v) => c -> (v.size + 1) }.toMap
+
+    /** All vocabularies as ONE parquet of (column, value, code), written
+      * in one job. Each column also gets a (column, null, -1) row for
+      * its unseen slot, so an empty vocabulary (an all-null column)
+      * keeps its arity across [[Encoders.load]]. */
+    def save(spark: SparkSession, path: String): Unit = {
+      val rows = vocabs.flatMap { case (c, v) =>
+        Row(c, null, -1L) +: v.zipWithIndex.map { case (x, k) => Row(c, x, k.toLong) }
+      }
+      spark.createDataFrame(rows.asJava, Encoders.Schema)
+        .coalesce(1).write.mode("overwrite").parquet(path)
+    }
+  }
+
+  object Encoders {
+    private val Schema = StructType(Seq(
+      StructField("column", StringType, nullable = false),
+      StructField("value", StringType),
+      StructField("code", LongType, nullable = false)))
+
+    /** Read a [[Encoders.save]]d parquet back: one scan, no schema
+      * inference, columns in name order. */
+    def load(spark: SparkSession, path: String): Encoders = {
+      val rows = spark.read.schema(Schema).parquet(path).collect()
+      Encoders(rows.groupBy(_.getString(0)).toSeq.sortBy(_._1).map { case (c, rs) =>
+        c -> rs.filter(_.getLong(2) >= 0).sortBy(_.getLong(2))
+          .map(_.getString(1)).toIndexedSeq
+      })
+    }
+  }
+
+  /** Fit every string column's vocabulary in ONE distinct pass over a
+    * stacked (column, value) frame — no cache, no per-column count.
+    * Codes are 0-based in ascending Spark string order (UTF-8 bytes,
+    * unsigned), nulls excluded: exactly the codes of
+    * [[graft.operators.Relational.labelEncode]]. The distinct pairs are
+    * collected and ordered on the driver; vocabularies are broadcast at
+    * apply time anyway, so holding them there adds no scale limit. */
+  def fitEncoders(df: DataFrame, cols: Seq[String]): Encoders = {
+    cols.foreach(c => require(df.schema(c).dataType == StringType,
+      s"fitEncoders encodes string columns only: $c is ${df.schema(c).dataType}"))
+    val pairs =
+      if (cols.isEmpty) Array.empty[Row]
+      else df.select(explode(array(cols.map(c =>
+          struct(lit(c).as("column"), col(c).as("value"))): _*)).as("kv"))
+        .select(col("kv.column"), col("kv.value"))
+        .where(col("value").isNotNull)
+        .distinct()
+        .collect()
+    val byCol = pairs.groupBy(_.getString(0))
+    val sparkOrder: Ordering[String] = (a, b) =>
+      UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
+    Encoders(cols.map(c => c -> byCol.getOrElse(c, Array.empty[Row])
+      .map(_.getString(1)).sorted(sparkOrder).toIndexedSeq))
+  }
+
+  /** Replace each encoded column by its code (-1 for unseen/null); each
+    * vocabulary joins as a small broadcast local frame. */
+  def applyEncoders(df: DataFrame, encoders: Encoders): DataFrame = {
+    val spark = df.sparkSession
+    encoders.vocabs.foldLeft(df) { case (acc, (c, vocab)) =>
+      val vocabFrame = spark.createDataFrame(
+        vocab.zipWithIndex.map { case (x, k) => Row(x, k.toLong) }.asJava,
+        StructType(Seq(StructField(c, StringType),
+          StructField(s"__code_$c", LongType, nullable = false))))
+      acc.join(broadcast(vocabFrame), Seq(c), "left")
         .withColumn(c, coalesce(col(s"__code_$c"), lit(-1L)))
         .drop(s"__code_$c")
     }
+  }
 
   /** Arity ceiling for NATIVE categorical treatment: a nominal feature
     * of arity a needs `maxBins >= a`, and maxBins is global — it also

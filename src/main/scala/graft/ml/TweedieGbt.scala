@@ -48,9 +48,18 @@ import org.apache.spark.sql.functions._
   * improvement, returning the model truncated at the best round — the
   * LightGBM semantics, not GBT's validationTol drift check.
   *
-  * Scale design (100 TB): the working frame carries (bins, label, F) on
-  * the histogram path — the raw feature vector is DROPPED after the
-  * one-time binning (r17: it was the largest resident column) — and is
+  * Scale design (100 TB): the input (features, label, valid flag) is
+  * materialized ONCE by `localCheckpoint`, so its plan — in M5 a scan
+  * plus one broadcast join per encoded column — is evaluated once, not
+  * once per setup read. One aggregate over that copy gives the
+  * negative-label check, the train-row mean (F0) and count (handed to
+  * `HistTree.buildBins`, which samples from it instead of recounting)
+  * and whether validation rows exist. The copy is released as soon as
+  * round 0's frame is materialized, so no more than two full copies
+  * are ever resident, the same peak as a round change. The working
+  * frame carries (bins, label, F) on the histogram path — the raw
+  * feature vector is DROPPED after the one-time binning (r17: it was
+  * the largest resident column) — and is
   * re-persisted per round with the previous round's storage RELEASED
   * (unpersist + checkpoint-block release: `DataFrame.unpersist` alone
   * cannot reach a localCheckpoint's RDD blocks, and that leak — one
@@ -282,25 +291,51 @@ object TweedieGbt {
 
   /** Fit on rows where `validCol` is false; validation rows drive early
     * stopping. `train` must already carry an assembled `features`
-    * vector column (use [[Gbt.fitEncoders]]/`assemble` upstream or
-    * [[fitAssembled]]'s companion below). Labels must be ≥ 0 (Tweedie
-    * support); negative labels fail fast. */
+    * vector column (use [[Gbt.fitEncoders]] and `Gbt.assemble`
+    * upstream). Labels must be ≥ 0 (Tweedie support); negative labels
+    * fail fast. */
   def fit(train: DataFrame, featuresCol: String, labelCol: String,
       validCol: String, params: Params): Model = {
     val spark = train.sparkSession
     val p = params.variancePower
 
+    // Rotation helper: a round frame can be a plain persist OR a
+    // localCheckpoint — DataFrame.unpersist alone cannot reach a
+    // checkpoint RDD's blocks (the graft.util.Cut.release gap), so
+    // every checkpointed round's FULL binned frame stayed resident
+    // until context GC. At full M5 width × 8 concurrent models that
+    // leak is what ran a 32 GB driver out of heap (r17 tweedie run).
+    def release(df: DataFrame): Unit = {
+      df.unpersist()
+      graft.util.Cut.release(df)
+    }
+
+    // the input plan (M5: a scan, one broadcast join per encoded
+    // column, the assembler) is evaluated ONCE: materialized here, and
+    // the label check, the train-row mean and count and the presence
+    // of validation rows all come from one aggregate over it
     val base0 = train
       .withColumn("__y", col(labelCol).cast("double"))
       .select(col(featuresCol).as("features"), col("__y"),
         col(validCol).cast("boolean").as("__valid"))
-    require(base0.filter(col("__y") < 0).isEmpty,
-      "Tweedie labels must be non-negative")
+      .localCheckpoint(true)
+    val stats = base0.agg(
+      count(when(col("__y") < 0, true)),
+      // avg ignores the nulls `when` leaves on validation rows: the
+      // mean over TRAIN rows only
+      avg(when(!col("__valid"), col("__y"))),
+      count(when(!col("__valid"), true)),
+      count(when(col("__valid"), true))).head()
+    val negatives = stats.getLong(0)
+    if (negatives > 0) release(base0)
+    require(negatives == 0, "Tweedie labels must be non-negative")
 
     // F0 = log(mean y) over TRAIN rows only (LightGBM's boost_from_average
     // for tweedie); ε-guard for an all-zero label column
-    val meanY = base0.filter(!col("__valid")).agg(avg("__y")).head().getDouble(0)
+    val meanY = stats.getDouble(1)
     val f0 = math.log(math.max(meanY, 1e-9))
+    val nTrain = stats.getLong(2)
+    val hasValid = stats.getLong(3) > 0
 
     // honor nominal-attribute metadata attached by Gbt.assemble: native
     // categorical splits need maxBins >= the largest nominal arity
@@ -320,7 +355,8 @@ object TweedieGbt {
     val histBins =
       if (params.histogram)
         Some(HistTree.buildBins(base0.filter(!col("__valid")), "features",
-          maxBins = params.histMaxBins, seed = params.seed))
+          maxBins = params.histMaxBins, seed = params.seed,
+          rowCount = Some(nTrain)))
       else None
     val base1 = histBins match {
       case Some(hb) =>
@@ -334,21 +370,13 @@ object TweedieGbt {
           .drop("features")
       case None => base0
     }
-    // Rotation helper: a round frame can be a plain persist OR a
-    // localCheckpoint — DataFrame.unpersist alone cannot reach a
-    // checkpoint RDD's blocks (the graft.util.Cut.release gap), so
-    // every checkpointed round's FULL binned frame stayed resident
-    // until context GC. At full M5 width × 8 concurrent models that
-    // leak is what ran a 32 GB driver out of heap (r17 tweedie run).
-    def release(df: DataFrame): Unit = {
-      df.unpersist()
-      graft.util.Cut.release(df)
-    }
     var cur = base1.withColumn("__F", lit(f0)).localCheckpoint(true)
+    // round 0's frame is materialized: the input copy is dead, so at
+    // most two resident copies exist at any point, as in the rounds
+    release(base0)
     var best = (Double.MaxValue, 0) // (valid deviance, round)
     val stages = scala.collection.mutable.ArrayBuffer.empty[BoostStage]
     val validDev = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val hasValid = !cur.filter(col("__valid")).isEmpty
 
     var round = 0
     var stop = false

@@ -163,4 +163,16 @@ class BenchSpec extends SparkSpec {
     assert(!Bench.divertToPartial(isSubset = true,
       scratchDefault = false, force = true, Some(full), smaller))
   }
+
+  test("compact line renders missing keys as null and still parses") {
+    // a full line without "runs" or "sf": each must come out as null,
+    // never an empty splice like "runs":,
+    val full = """{"metric":"total","value":12.5,"failed":0,""" +
+      """"degraded":false,"chunks":1,"queries":{"t01":0.5,"t02":0.7}}"""
+    val compact = Bench.compactLine(full)
+    import org.json4s._
+    val j = org.json4s.jackson.JsonMethods.parse(compact)
+    assert(j \ "runs" == JNull && j \ "sf" == JNull, compact)
+    assert(j \ "value" == JDouble(12.5) && j \ "n_queries" == JInt(2), compact)
+  }
 }

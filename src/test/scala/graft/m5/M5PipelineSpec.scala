@@ -28,7 +28,12 @@ class M5PipelineSpec extends SparkSpec {
 
   test("golden run: full DAG end-to-end, checkpoint schemas and row counts") {
     val (pipeline, outDir) = freshPipeline()
+    // the session is shared, so compare against what was cached before
+    def cached = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val cachedBefore = cached
     val report = pipeline.run(log = _ => ())
+    assert((cached -- cachedBefore).isEmpty,
+      "a DAG run must leave no persisted frame behind")
     // ingest + 2 stores × (base + ts) + 2 stores × 2 weeks × (train,
     // test, model, pred) + predictions + submission = 1 + 4 + 16 + 2 = 23
     assert(report.ran.size == 23, report.ran.mkString(", "))

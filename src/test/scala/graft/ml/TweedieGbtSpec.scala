@@ -110,6 +110,19 @@ class TweedieGbtSpec extends SparkSpec {
     assert(a.sameElements(b), "fixed-seed fits must agree run to run")
   }
 
+  test("a histogram-path fit leaves nothing persisted") {
+    demand.count()
+    def cached = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val before = cached
+    val model = TweedieGbt.fit(demand, "features", "y", "is_valid",
+      TweedieGbt.Params(maxIter = 3, stepSize = 0.2, maxDepth = 3,
+        variancePower = 1.3, histogram = true, checkpointInterval = 2))
+    assert(model.isHistogram && model.stages.nonEmpty)
+    val left = cached -- before
+    assert(left.isEmpty,
+      s"the materialized input and every round frame must be released: $left")
+  }
+
   test("negative labels fail fast") {
     val bad = Seq((1.0, -1.0), (2.0, 3.0)).toDF("x1", "y")
     val assembled = new org.apache.spark.ml.feature.VectorAssembler()
